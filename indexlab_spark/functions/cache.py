@@ -21,8 +21,8 @@ raises and is swallowed (its JVM cache died with it). Eviction is
 best-effort by the same reasoning everywhere: it must never fail the
 operator that happens to be calling pin().
 
-Same pattern as functions.text's _ZIP_CACHE, centralized so new
-operators stop growing private copies.
+This is the engine's one ring: zip_index's row-numbering pins live here
+too, so ``reset_pins`` reaches every pin the engine holds.
 """
 
 from __future__ import annotations
@@ -30,17 +30,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 _RINGS: dict[int, list] = {}
-# r16: ring size is deployment-tunable. On a single shared JVM
-# (local-mode bench/correctness flows) live pins compete with
-# execution memory — spark.memory.storageFraction protects cached
-# blocks from eviction, so too many live pins squeeze the very joins
-# they serve; measured suite-level regressions on UNRELATED queries
-# once the r16 LRU fix stopped the ring from (accidentally)
-# self-thrashing. On a real cluster with per-executor storage the
-# bound can be raised freely.
-import os as _os
-
-RING_MAX = int(_os.environ.get("SPARK_GRAFT_PIN_RING", "8"))
+# On a single shared JVM (local-mode bench/correctness flows) live pins
+# compete with execution memory — spark.memory.storageFraction protects
+# cached blocks from eviction, so too many live pins squeeze the very
+# joins they serve; r16 measured suite-level regressions on UNRELATED
+# queries once the LRU fix stopped the ring from (accidentally)
+# self-thrashing.
+RING_MAX = 8
 MAX_RINGS = 4
 
 
@@ -67,17 +63,9 @@ def pin(df: DataFrame, deser: bool = False) -> DataFrame:
     """
     from pyspark import StorageLevel
 
-    # env override for A/B experiments and deployments with storage
-    # headroom; default keeps the per-call choice above
-    forced = _os.environ.get("SPARK_GRAFT_PIN_STORAGE")
-    if forced:
-        level = getattr(StorageLevel, forced, StorageLevel.MEMORY_AND_DISK)
-    else:
-        level = (
-            StorageLevel.MEMORY_AND_DISK_DESER
-            if deser
-            else StorageLevel.MEMORY_AND_DISK
-        )
+    level = (
+        StorageLevel.MEMORY_AND_DISK_DESER if deser else StorageLevel.MEMORY_AND_DISK
+    )
     key = id(df.sparkSession)
     ring = _RINGS.setdefault(key, [])
     # r17: scan the ring BEFORE persisting — a same-semantics hit means

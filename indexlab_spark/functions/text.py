@@ -14,12 +14,8 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.storagelevel import StorageLevel
 
-# zip_index pins its input across its two passes; bounded ring of pinned
-# frames (callers materialize lazily, so we can't unpersist immediately).
-_ZIP_CACHE: list[DataFrame] = []
-_ZIP_CACHE_MAX = 4
+from indexlab_spark.functions.cache import pin
 
 
 def normalize_df(df: DataFrame) -> DataFrame:
@@ -81,25 +77,21 @@ def zip_index(df: DataFrame, out_col: str) -> DataFrame:
     exactly what ``Window.orderBy(monotonically_increasing_id())``
     produced, so results are bit-identical to the old global window.
 
-    The input is persisted (MEMORY_AND_DISK) before the counting pass so
-    the numbering pass sees the SAME partition layout and row order even
-    when the upstream lineage is nondeterministic (samples, AQE-coalesced
-    shuffles) — without this, the two jobs could disagree and row numbers
-    would silently duplicate or skip. The last few pinned inputs are kept
-    (bounded ring, evicting beyond ``_ZIP_CACHE_MAX``) because callers
-    materialize the numbered frame lazily.
+    The input is persisted (serialized MEMORY_AND_DISK) before the
+    counting pass so the numbering pass sees the SAME partition layout
+    and row order even when the upstream lineage is nondeterministic
+    (samples, AQE-coalesced shuffles) — without this, the two jobs could
+    disagree and row numbers would silently duplicate or skip. Callers
+    materialize the numbered frame lazily, so the pin goes to the shared
+    ``functions.cache`` ring rather than being released here.
     """
-    part = (
+    part = pin(
         df.withColumn("_pid", F.spark_partition_id())
         .withColumn("_mid", F.monotonically_increasing_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     counts = sorted(
         (r[0], r[1]) for r in part.groupBy("_pid").count().collect()
     )
-    _ZIP_CACHE.append(part)
-    while len(_ZIP_CACHE) > _ZIP_CACHE_MAX:
-        _ZIP_CACHE.pop(0).unpersist(False)
     offsets, acc = [], 0
     for pid, cnt in counts:
         offsets.append((int(pid), acc))

@@ -56,25 +56,15 @@ MAX_COLLECT_QUERY_ROWS = 250_000
 #: compiled MAX_THREADS=2, so one big sgemm uses at most 2 of the
 #: driver's cores; row-chunked assignment over a thread pool (BLAS drops
 #: the GIL) recovers the rest. _LLOYD_POOL_MIN gates on n*k so PQ
-#: codebook fits and tiny corpora keep the zero-overhead single call;
-#: workers are env-tunable per deployment (a shared driver may want 1).
+#: codebook fits and tiny corpora keep the zero-overhead single call.
+#: Workers are capped by the engine's core count (session.CPUS): a
+#: local[8] scaling run must not be flattered by a driver pool using
+#: cores Spark was not given.
 import os as _os
 
-#: default also respects $SPARK_GRAFT_CPUS (the bench driver's core-count
-#: contract): a local[8] scaling run must not be flattered by a driver
-#: pool using cores Spark was not given.
-_LLOYD_POOL_WORKERS = int(
-    _os.environ.get(
-        "SPARK_GRAFT_LLOYD_THREADS",
-        str(
-            min(
-                8,
-                _os.cpu_count() or 1,
-                int(_os.environ.get("SPARK_GRAFT_CPUS", "32") or 32),
-            )
-        ),
-    )
-)
+from indexlab_spark.session import CPUS as _CPUS
+
+_LLOYD_POOL_WORKERS = min(8, _os.cpu_count() or 1, _CPUS)
 _LLOYD_POOL_MIN = 2_000_000
 _LLOYD_CHUNK = 8_192
 

@@ -9,6 +9,10 @@ is one lazy Spark DAG per build:
   chunk (posexplode) -> embed (Arrow batches) -> [KMeans cluster_id] ->
   write chunks partition (index_name, version) -> append manifest row
 
+append_to_index runs the same DAG (``_ingest`` then ``_commit``) with
+``doc_no`` / ``chunk_pos`` bases continuing after the latest version's
+maxima, and writes the union with that version's rows as a new version.
+
 The artifact set (faiss + docs.json + ids.json + manifest.json,
 pipeline.py:67-111) collapses into the partitioned ``chunks`` table +
 one ``manifests`` row; the version archive (pipeline.py:117-163) is the
@@ -23,11 +27,11 @@ from __future__ import annotations
 
 import hashlib
 import os
+from contextlib import contextmanager
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from indexlab_spark.config import (
     DEFAULT_BM25_K,
@@ -63,75 +67,94 @@ def _sha256(path: str) -> str:
     return h.hexdigest()
 
 
-def build_index(
+@contextmanager
+def _ingest(
     spark: SparkSession,
     source: str | DataFrame,
     cfg: IngestConfig,
-    engine: EngineConfig | None = None,
-    version: str | None = None,
-) -> dict:
-    """X1 — full ingest; returns the manifest dict (pipeline.py:87-108
-    fields)."""
-    engine = engine or EngineConfig()
-    version = version or _version_now()
+    doc_base: int = 0,
+    pos_base: int = 0,
+):
+    """Source -> embedded chunk rows, the write DAG both build_index and
+    append_to_index run. Docs number from ``doc_base`` (doc_no ==
+    pandas row index parity, P3) and chunks from ``pos_base``; yields
+    ``(rows, (source_name, sha256))``.
 
+    chunk_pos is the global 0-based insert order (FAISS internal id
+    analog, K5): global_order_index is a range shuffle + parallel
+    per-partition numbering, where a Window.orderBy would funnel every
+    embedded row through one task. The embeddings are persisted first so
+    the numbering's counting pass does not re-embed, and released on exit
+    — after the caller's write, so a long session's builds do not each
+    keep a full-corpus embedding cache."""
     if isinstance(source, str):
         from indexlab_spark.sources.reader import read_any
 
         df = read_any(spark, source)
-        source_name = os.path.basename(source)
-        sha = _sha256(source)
+        source_name, sha = os.path.basename(source), _sha256(source)
     else:
-        df = source
-        source_name, sha = "<dataframe>", ""
-
-    df = normalize_df(df)
-    df = with_row_numbers(df)  # doc_no == pandas row index parity (P3)
-    docs = with_doc_text(df, cfg.text_column)
+        df, source_name, sha = source, "<dataframe>", ""
+    df = with_row_numbers(normalize_df(df))
+    docs = with_doc_text(df, cfg.text_column).withColumn(
+        "doc_no", F.col("doc_no") + F.lit(doc_base)
+    )
     chunks = explode_chunks(
         docs, mode=cfg.chunk_mode, size=cfg.chunk_size, overlap=cfg.chunk_overlap
     )
     embedded = with_embedding(
         chunks, model=cfg.model, normalize=cfg.normalize
+    ).persist()
+    try:
+        rows = global_order_index(
+            embedded, ["doc_no", "chunk_no"], "chunk_pos"
+        ).withColumn("chunk_pos", F.col("chunk_pos") + F.lit(pos_base))
+        yield rows, (source_name, sha)
+    finally:
+        embedded.unpersist(False)
+
+
+def _commit(
+    spark: SparkSession,
+    engine: EngineConfig,
+    cfg: IngestConfig,
+    version: str,
+    rows: DataFrame,
+    source: tuple[str, str],
+    params: dict,
+    carried: DataFrame | None = None,
+) -> dict:
+    """Write ``rows`` (plus ``carried``, an older version's chunks) as
+    the (index_name, version) partition, count it, and append its
+    manifest row; returns the manifest dict (pipeline.py:87-108 fields).
+    Rows of a non-IVF ``cfg`` get a null cluster_id."""
+    from indexlab_spark.schemas import MANIFESTS_SCHEMA
+
+    source_name, sha = source
+    cluster = (
+        F.col("cluster_id") if cfg.backend == "ivf"
+        else F.lit(None).cast("int").alias("cluster_id")
     )
-    # chunk_pos: global 0-based insert order (FAISS internal id analog, K5).
-    # global_order_index = range-shuffle + parallel per-partition numbering;
-    # the old Window.orderBy funneled every embedded row through ONE task.
-    # Persist first: the numbering's counting pass must not re-embed.
-    # (released after the chunk write below — builds in a long session
-    # must not each pin a full-corpus embedding cache)
-    embedded_pin = embedded.persist()
-    embedded = global_order_index(embedded_pin, ["doc_no", "chunk_no"], "chunk_pos")
-
-    if cfg.backend == "ivf":
-        embedded, centroids = build_ivf(embedded, nlist=cfg.nlist, seed=cfg.seed)
-        centroids.withColumn("index_name", F.lit(cfg.index_name)).withColumn(
-            "version", F.lit(version)
-        ).write.mode("append").parquet(engine.centroids_path())
-    else:
-        embedded = embedded.withColumn("cluster_id", F.lit(None).cast("int"))
-
-    out = embedded.select(
+    out = rows.select(
         F.lit(cfg.index_name).alias("index_name"),
         F.lit(version).alias("version"),
-        "doc_no",
-        "chunk_no",
-        "doc_id",
-        "chunk_pos",
-        "text",
-        "embedding",
-        "cluster_id",
+        "doc_no", "chunk_no", "doc_id", "chunk_pos", "text", "embedding",
+        cluster,
         F.lit(source_name).alias("source"),
     )
+    if carried is not None:
+        out = carried.withColumn("version", F.lit(version)).select(
+            *out.columns
+        ).unionByName(out)
     out.write.mode("append").partitionBy("index_name", "version").parquet(
         engine.chunks_path()
     )
-    embedded_pin.unpersist(False)
-
-    written = spark.read.parquet(engine.chunks_path()).filter(
-        (F.col("index_name") == cfg.index_name) & (F.col("version") == version)
+    count = (
+        spark.read.parquet(engine.chunks_path())
+        .filter(
+            (F.col("index_name") == cfg.index_name) & (F.col("version") == version)
+        )
+        .count()
     )
-    count = written.count()
     created_at = datetime.now(timezone.utc)
     manifest = {
         "index_name": cfg.index_name,
@@ -141,19 +164,7 @@ def build_index(
         "model": cfg.model,
         "normalize": cfg.normalize,
         "backend": cfg.backend,
-        "params": {
-            "nlist": str(cfg.nlist),
-            "nprobe": str(cfg.nprobe),
-            "M": str(cfg.m),
-            "efConstruction": str(cfg.ef_construction),
-            "efSearch": str(cfg.ef_search),
-            "seed": str(cfg.seed),
-            # recorded so append_to_index reproduces the SAME text
-            # extraction; losing it silently switched appended docs to
-            # the concat_row fallback (params is a map column, so this
-            # adds no manifest schema change)
-            "text_column": cfg.text_column or "",
-        },
+        "params": params,
         "chunking": {
             "mode": cfg.chunk_mode,
             "size": cfg.chunk_size,
@@ -170,22 +181,41 @@ def build_index(
             }
         },
     }
-    from indexlab_spark.schemas import MANIFESTS_SCHEMA
-
-    spark.createDataFrame(
-        [
-            (
-                manifest["index_name"], manifest["version"], manifest["dim"],
-                manifest["count"], manifest["model"], manifest["normalize"],
-                manifest["backend"], manifest["params"],
-                (cfg.chunk_mode, cfg.chunk_size, cfg.chunk_overlap), "ip",
-                created_at,
-                {source_name: (count, sha, created_at, source_name)},
-            )
-        ],
-        MANIFESTS_SCHEMA,
-    ).write.mode("append").parquet(engine.manifests_path())
+    spark.createDataFrame([manifest], MANIFESTS_SCHEMA).write.mode(
+        "append"
+    ).parquet(engine.manifests_path())
     return manifest
+
+
+def build_index(
+    spark: SparkSession,
+    source: str | DataFrame,
+    cfg: IngestConfig,
+    engine: EngineConfig | None = None,
+    version: str | None = None,
+) -> dict:
+    """X1 — full ingest; returns the manifest dict (pipeline.py:87-108
+    fields)."""
+    engine = engine or EngineConfig()
+    version = version or _version_now()
+    params = {
+        "nlist": str(cfg.nlist),
+        "nprobe": str(cfg.nprobe),
+        "M": str(cfg.m),
+        "efConstruction": str(cfg.ef_construction),
+        "efSearch": str(cfg.ef_search),
+        "seed": str(cfg.seed),
+        # recorded so append_to_index reproduces the SAME text extraction
+        # (params is a map column, so this adds no manifest schema change)
+        "text_column": cfg.text_column or "",
+    }
+    with _ingest(spark, source, cfg) as (rows, src):
+        if cfg.backend == "ivf":
+            rows, centroids = build_ivf(rows, nlist=cfg.nlist, seed=cfg.seed)
+            centroids.withColumn("index_name", F.lit(cfg.index_name)).withColumn(
+                "version", F.lit(version)
+            ).write.mode("append").parquet(engine.centroids_path())
+        return _commit(spark, engine, cfg, version, rows, src, params)
 
 
 def append_to_index(
@@ -196,9 +226,9 @@ def append_to_index(
     version: str | None = None,
 ) -> dict:
     """Incremental add: new documents become a NEW immutable version
-    containing old + new chunks (doc numbering continues after the
-    existing max doc_no; build config inherited from the latest
-    manifest).
+    containing old + new chunks. The new rows run build_index's DAG with
+    doc_no / chunk_pos continuing after the existing maxima and the build
+    config inherited from the latest manifest.
 
     The reference can only rebuild from scratch (its FAISS artifact is
     monolithic); here the old version's chunks are reused AS DATA — no
@@ -208,6 +238,7 @@ def append_to_index(
     """
     engine = engine or EngineConfig()
     old_chunks, manifest = load_index(spark, index_name, engine)
+    params = dict(manifest.get("params") or {})
     cfg = IngestConfig(
         index_name=index_name,
         chunk_mode=manifest["chunking"]["mode"],
@@ -217,76 +248,19 @@ def append_to_index(
         normalize=manifest["normalize"],
         backend="flat",  # IVF re-clustering is a rebuild decision
         dim=manifest["dim"],
-        # restore the build's text extraction (recorded in params by
-        # build_index; older manifests without it fall back as before)
-        text_column=(manifest.get("params") or {}).get("text_column") or None,
+        # older manifests without text_column fall back to concat_row
+        text_column=params.get("text_column") or None,
     )
     version = version or _version_now()
     base = old_chunks.agg(
         F.coalesce(F.max("doc_no") + 1, F.lit(0)).alias("b"),
         F.coalesce(F.max("chunk_pos") + 1, F.lit(0)).alias("p"),
     ).collect()[0]
-
-    if isinstance(source, str):
-        from indexlab_spark.sources.reader import read_any
-
-        df = read_any(spark, source)
-        source_name = os.path.basename(source)
-    else:
-        df = source
-        source_name = "<dataframe>"
-    df = normalize_df(df)
-    df = with_row_numbers(df)
-    docs = with_doc_text(df, cfg.text_column).withColumn(
-        "doc_no", F.col("doc_no") + F.lit(int(base["b"]))
-    )
-    chunks = explode_chunks(
-        docs, mode=cfg.chunk_mode, size=cfg.chunk_size, overlap=cfg.chunk_overlap
-    )
-    embedded_pin = with_embedding(
-        chunks, model=cfg.model, normalize=cfg.normalize
-    ).persist()
-    embedded = global_order_index(
-        embedded_pin, ["doc_no", "chunk_no"], "chunk_pos"
-    )
-    new_rows = embedded.withColumn(
-        "chunk_pos", F.col("chunk_pos") + F.lit(int(base["p"]))
-    ).select(
-        F.lit(index_name).alias("index_name"),
-        F.lit(version).alias("version"),
-        "doc_no", "chunk_no", "doc_id", "chunk_pos", "text", "embedding",
-        F.lit(None).cast("int").alias("cluster_id"),
-        F.lit(source_name).alias("source"),
-    )
-    carried = old_chunks.withColumn("version", F.lit(version)).select(
-        *[f.name for f in new_rows.schema.fields]
-    )
-    carried.unionByName(new_rows).write.mode("append").partitionBy(
-        "index_name", "version"
-    ).parquet(engine.chunks_path())
-    embedded_pin.unpersist(False)
-
-    count = (
-        spark.read.parquet(engine.chunks_path())
-        .filter((F.col("index_name") == index_name) & (F.col("version") == version))
-        .count()
-    )
-    created_at = datetime.now(timezone.utc)
-    from indexlab_spark.schemas import MANIFESTS_SCHEMA
-
-    spark.createDataFrame(
-        [
-            (
-                index_name, version, cfg.dim, count, cfg.model, cfg.normalize,
-                cfg.backend, dict(manifest.get("params") or {}),
-                (cfg.chunk_mode, cfg.chunk_size, cfg.chunk_overlap), "ip",
-                created_at,
-                {source_name: (count, "", created_at, source_name)},
-            )
-        ],
-        MANIFESTS_SCHEMA,
-    ).write.mode("append").parquet(engine.manifests_path())
-    return {"index_name": index_name, "version": version, "count": count}
+    with _ingest(spark, source, cfg, int(base["b"]), int(base["p"])) as (rows, src):
+        out = _commit(
+            spark, engine, cfg, version, rows, src, params, carried=old_chunks
+        )
+    return {k: out[k] for k in ("index_name", "version", "count")}
 
 
 def load_index(

@@ -13,7 +13,10 @@ import weakref
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+#: Core count the engine may use ($SPARK_GRAFT_CPUS; unset or empty -> 32):
+#: the local master's thread count, the default shuffle partition count
+#: and the cap on driver-side thread pools (operators.knn).
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or 32)
 
 
 def get_spark(
@@ -35,9 +38,8 @@ def get_spark(
     - Session timezone pinned to UTC so timestamp semantics match the
       DuckDB oracle regardless of host timezone.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
-    sp = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
+    master = master or os.environ.get("SPARK_MASTER", f"local[{CPUS}]")
+    sp = shuffle_partitions or CPUS
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
