@@ -50,7 +50,8 @@ def pin(df: DataFrame, deser: bool = False) -> DataFrame:
     then unpersisted the data the newer one was actively reusing
     (measured: a repeated registry query re-ran its whole pinned
     subtree because its own second call had evicted its first call's
-    cache through exactly this aliasing).
+    cache through exactly this aliasing). A hit whose data a bare
+    ``spark.catalog.clearCache()`` dropped is persisted again instead.
 
     ``deser=True`` requests deserialized storage (MEMORY_AND_DISK_DESER)
     for frames whose consumers are JVM-side joins/aggregates: those pay
@@ -76,8 +77,14 @@ def pin(df: DataFrame, deser: bool = False) -> DataFrame:
     for i, cached in enumerate(ring):
         try:
             if cached is df or cached.sameSemantics(df):
-                ring.append(ring.pop(i))  # LRU refresh, no duplicate
-                return df
+                live = cached.storageLevel != StorageLevel.NONE
+                ring.pop(i)
+                if live:
+                    ring.append(cached)  # LRU refresh, no duplicate
+                    return df
+                # a bare spark.catalog.clearCache() emptied the cache
+                # behind the ring: drop the stale entry and re-persist
+                break
         except Exception:
             # r17 (ADVICE): skip only the broken entry (likely a stopped
             # session's frame) — aborting the whole scan silently

@@ -17,6 +17,17 @@ faiss_flat.py:5-23, faiss_ivf.py:5-31) become two Spark strategies:
   table out partitioned/bucketed by cluster_id turns this into physical
   partition pruning at scale.
 
+The quantized family (FAISS IndexPQ / IndexScalarQuantizer / IndexIVFPQ
+analogs: ``pq_search``, ``sq8_search``, ``ivfpq_search``) scores compact
+codes first and re-scores survivors exactly. Every collect-and-broadcast
+search shares one skeleton: the bounded query guard (``_query_batch``:
+driver collect, exact ``knn_join_blocked`` fallback or ``ValueError``,
+empty result frame), the vectorised per-batch partial top-k
+(``_batch_topk``) and, for the quantized three, the round -> pool
+window -> exact rerank tail (``_rerank_exact``). Build and append share
+one codec each (``_pq_encoder``, ``_sq8_encoder``, ``_assign_cells``),
+so an appended vector encodes exactly as a rebuilt one.
+
 Determinism: scores accumulate in float64 (functions/vector.dot) and ties
 break on ascending ``chunk_pos``/doc id — FAISS returns the lowest
 internal id first (K2 tie note), and a deterministic secondary key is
@@ -44,12 +55,14 @@ def _rank_window(query_id_col: str, tie_col: str):
 
 
 #: Driver-collect guard for the "queries are the small side by contract"
-#: paths (knn_matmul / pq_search / ivf_search_pruned). 250k rows x dim 64
+#: paths (knn_matmul / ivf_search_pruned / pq_search / sq8_search /
+#: ivfpq_search, all through _query_batch). 250k rows x dim 64
 #: float64 is ~128 MB as Arrow/numpy buffers — and because the bounded
 #: fetch below goes through Arrow (toPandas), that estimate is what the
 #: driver actually holds, not 3-5x more in boxed Row objects. Beyond the
 #: bound those paths silently fall back to the fully-distributed
-#: knn_join_blocked instead of OOMing the driver.
+#: knn_join_blocked instead of OOMing the driver (a codes frame without
+#: raw vectors raises instead).
 MAX_COLLECT_QUERY_ROWS = 250_000
 
 #: Driver Lloyd assignment-step fan-out (r17). The sandbox's OpenBLAS is
@@ -99,6 +112,155 @@ def _normalized_queries(queries_df: DataFrame, query_vec_col: str) -> DataFrame:
         )
         .drop("_qn")
     )
+
+
+def _hits_ddl(
+    queries_df: DataFrame, corpus_df: DataFrame, query_id_col: str, doc_id_col: str
+) -> str:
+    """``(query_id, doc_id, score double)`` with both id types carried over."""
+    qid_type = queries_df.schema[query_id_col].dataType.simpleString()
+    did_type = corpus_df.schema[doc_id_col].dataType.simpleString()
+    return f"{query_id_col} {qid_type}, {doc_id_col} {did_type}, score double"
+
+
+def _query_batch(
+    spark,
+    caller: str,
+    queries_df: DataFrame,
+    corpus_df: DataFrame,
+    k: int,
+    max_collect_rows: int,
+    query_id_col: str,
+    query_vec_col: str,
+    doc_id_col: str,
+    corpus_vec_col: str,
+    fallback_queries: DataFrame | None = None,
+):
+    """The small-side query contract of every collect-and-broadcast
+    search. Returns ``(q_ids, q_mat float64, None)`` for a non-empty
+    batch of at most ``max_collect_rows`` rows, else ``(None, None,
+    out)`` with ``out`` already the answer: the empty (query_id, doc_id,
+    score double, rank int) frame, or — for an over-large batch — the
+    exact distributed :func:`knn_join_blocked` of ``fallback_queries``
+    (default ``queries_df``) against ``corpus_df``. Raises when the batch
+    is over-large and ``corpus_df`` has no raw vectors to fall back on."""
+    q_rows = _collect_bounded(
+        queries_df, [query_id_col, query_vec_col], max_collect_rows
+    )
+    if q_rows is None:
+        if corpus_vec_col not in corpus_df.columns:
+            raise ValueError(
+                f"{caller}: query batch exceeds max_collect_rows="
+                f"{max_collect_rows} and codes_df lacks '{corpus_vec_col}' for "
+                "an exact fallback; split the query batch or keep the raw "
+                "vectors alongside the codes"
+            )
+        out = knn_join_blocked(
+            queries_df if fallback_queries is None else fallback_queries,
+            corpus_df, k,
+            left_id_col=query_id_col, left_vec_col=query_vec_col,
+            right_id_col=doc_id_col, right_vec_col=corpus_vec_col,
+        )
+        return None, None, out
+    if not q_rows:
+        ddl = _hits_ddl(queries_df, corpus_df, query_id_col, doc_id_col)
+        return None, None, spark.createDataFrame([], ddl + ", rank int")
+    q_ids = np.array([r[0] for r in q_rows])
+    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
+    return q_ids, q_mat, None
+
+
+def _batch_topk(
+    spark,
+    corpus: DataFrame,
+    q_ids: np.ndarray,
+    state,
+    score_batch,
+    k: int,
+    query_id_col: str,
+    doc_id_col: str,
+    ddl: str,
+) -> DataFrame:
+    """Per-Arrow-batch partial top-k: ``(q_ids, state)`` is broadcast,
+    ``score_batch(state, pdf)`` turns one corpus batch into its
+    ``(n_q, batch)`` score matrix, and only each query's local top ``k``
+    leaves the partition (score desc, batch order on ties)."""
+    bc = spark.sparkContext.broadcast((q_ids, state))
+
+    def _topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        ids, st = bc.value
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            scores = score_batch(st, pdf)
+            kk = min(k, scores.shape[1])
+            # argpartition then stable sort of the top slice per query —
+            # all rows at once (take_along_axis), no per-query python
+            # loop: the loop was the batch hot path once the matmul
+            # itself went to BLAS (measured ~2x on the b2 bench shape)
+            part = np.argpartition(-scores, kk - 1, axis=1)[:, :kk]
+            doc_ids = pdf[doc_id_col].to_numpy()
+            top_scores = np.take_along_axis(scores, part, axis=1)
+            order = np.argsort(-top_scores, axis=1, kind="stable")
+            top_idx = np.take_along_axis(part, order, axis=1)
+            yield pd.DataFrame(
+                {
+                    query_id_col: np.repeat(ids, kk),
+                    doc_id_col: doc_ids[top_idx.ravel()],
+                    "score": np.take_along_axis(
+                        scores, top_idx, axis=1
+                    ).ravel(),
+                }
+            )
+
+    return corpus.mapInPandas(_topk, ddl)
+
+
+def _rerank_exact(
+    cand: DataFrame,
+    queries_df: DataFrame,
+    codes_df: DataFrame,
+    k: int,
+    rerank: int,
+    pool: int,
+    round_to: int | None,
+    query_id_col: str,
+    query_vec_col: str,
+    doc_id_col: str,
+    corpus_vec_col: str,
+) -> DataFrame:
+    """The quantized searches' tail: optional ``round_to`` rounding of the
+    approximate scores, a pool window keeping ``pool`` candidates per
+    query, then — when ``rerank`` is set and ``codes_df`` still carries
+    raw vectors — exact re-scoring (rounded the same way) of those
+    survivors only and the final top-``k`` window."""
+    if round_to is not None:
+        cand = cand.withColumn("score", F.round("score", round_to))
+    ranked = cand.withColumn(
+        "rank", F.row_number().over(_rank_window(query_id_col, doc_id_col))
+    ).filter(F.col("rank") <= pool)
+    if not rerank or corpus_vec_col not in codes_df.columns:
+        return ranked.filter(F.col("rank") <= k)
+    exact_sc = dot(F.col(query_vec_col), F.col(corpus_vec_col))
+    if round_to is not None:
+        exact_sc = F.round(exact_sc, round_to)
+    exact = (
+        ranked.select(query_id_col, doc_id_col)
+        .join(codes_df.select(doc_id_col, corpus_vec_col), doc_id_col)
+        .join(
+            F.broadcast(queries_df.select(query_id_col, query_vec_col)),
+            query_id_col,
+        )
+        .select(
+            query_id_col,
+            doc_id_col,
+            exact_sc.alias("score"),
+        )
+    )
+    out = exact.withColumn(
+        "rank", F.row_number().over(_rank_window(query_id_col, doc_id_col))
+    )
+    return out.filter(F.col("rank") <= k)
 
 
 def knn_join(
@@ -183,70 +345,32 @@ def knn_matmul(
     Scale: no cross-join materialization, no full-corpus shuffle; the
     only shuffle is the candidate merge, O(n_partitions · n_q · k).
     """
-    qid_type = queries_df.schema[query_id_col].dataType.simpleString()
-    did_type = corpus_df.schema[doc_id_col].dataType.simpleString()
-    q_rows = _collect_bounded(
-        queries_df, [query_id_col, query_vec_col], max_collect_rows
-    )
-    if q_rows is None:
-        qdf = (
+    q_ids, q_mat, done = _query_batch(
+        spark, "knn_matmul", queries_df, corpus_df, k, max_collect_rows,
+        query_id_col, query_vec_col, doc_id_col, corpus_vec_col,
+        fallback_queries=(
             _normalized_queries(queries_df, query_vec_col)
             if normalize_queries
-            else queries_df
-        )
-        return knn_join_blocked(
-            qdf, corpus_df, k,
-            left_id_col=query_id_col, left_vec_col=query_vec_col,
-            right_id_col=doc_id_col, right_vec_col=corpus_vec_col,
-        )
-    if not q_rows:
-        return spark.createDataFrame(
-            [],
-            f"{query_id_col} {qid_type}, {doc_id_col} {did_type}, score double, rank int",
-        )
-    q_ids = np.array([r[0] for r in q_rows])
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
+            else None
+        ),
+    )
+    if done is not None:
+        return done
     if normalize_queries:
         norms = np.linalg.norm(q_mat, axis=1, keepdims=True)
         norms[norms == 0] = 1.0
         q_mat = q_mat / norms
-    bc = spark.sparkContext.broadcast((q_ids, q_mat))
 
-    def _partial_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, qm = bc.value
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            emb = np.array(pdf[corpus_vec_col].tolist(), dtype=np.float64)
-            scores = qm @ emb.T  # (n_q, batch)
-            nb = scores.shape[1]
-            kk = min(k, nb)
-            # argpartition then stable sort of the top slice per query —
-            # all rows at once (take_along_axis), no per-query python
-            # loop: the loop was the batch hot path once the matmul
-            # itself went to BLAS (measured ~2x on the b2 bench shape)
-            part = np.argpartition(-scores, kk - 1, axis=1)[:, :kk]
-            doc_ids = pdf[doc_id_col].to_numpy()
-            top_scores = np.take_along_axis(scores, part, axis=1)
-            order = np.argsort(-top_scores, axis=1, kind="stable")
-            top_idx = np.take_along_axis(part, order, axis=1)
-            yield pd.DataFrame(
-                {
-                    query_id_col: np.repeat(ids, kk),
-                    doc_id_col: doc_ids[top_idx.ravel()],
-                    "score": np.take_along_axis(
-                        scores, top_idx, axis=1
-                    ).ravel(),
-                }
-            )
+    def _matmul(qm: np.ndarray, pdf: pd.DataFrame) -> np.ndarray:
+        emb = np.array(pdf[corpus_vec_col].tolist(), dtype=np.float64)
+        return qm @ emb.T  # (n_q, batch)
 
     from indexlab_spark.plans.colocate import fan_out
 
-    candidates = fan_out(
-        corpus_df.select(doc_id_col, corpus_vec_col)
-    ).mapInPandas(
-        _partial_topk,
-        f"{query_id_col} {qid_type}, {doc_id_col} {did_type}, score double",
+    candidates = _batch_topk(
+        spark, fan_out(corpus_df.select(doc_id_col, corpus_vec_col)),
+        q_ids, q_mat, _matmul, k, query_id_col, doc_id_col,
+        _hits_ddl(queries_df, corpus_df, query_id_col, doc_id_col),
     )
     ranked = candidates.withColumn(
         "rank", F.row_number().over(_rank_window(query_id_col, doc_id_col))
@@ -477,6 +601,44 @@ def build_ivf(
     rng = np.random.default_rng(seed)
     centers = _lloyd(train, min(nlist, len(train)), iters, rng)
 
+    # NO fan_out here (unlike knn_matmul): repartitioning the corpus for
+    # the assign pass was measured net-negative — the shuffle of the full
+    # vector payload costs more than the serial BLAS assign it would
+    # parallelize (b6_ivf_build_large 5.1s -> 6.4s). On a real cluster
+    # the corpus arrives in many splits and the assign pass is parallel
+    # without any repartition.
+    ids = np.arange(len(centers), dtype=np.int32)
+    assigned = _assign_cells(chunks_df, ids, centers, vec_col)
+    return assigned, _centroid_frame(chunks_df.sparkSession, centers)
+
+
+def _centroid_frame(spark, centers: np.ndarray) -> DataFrame:
+    """The persistable IVF state: one row per center, ids 0..k-1."""
+    return spark.createDataFrame(
+        [(int(i), [float(x) for x in c]) for i, c in enumerate(centers)],
+        "cluster_id int, centroid array<double>",
+    )
+
+
+def _centroid_state(centroids_df: DataFrame, caller: str):
+    """Collect a centroid frame (nlist x dim — bounded by construction)
+    as ``(ids int32, centers float64)`` in cluster_id order."""
+    cents = sorted(centroids_df.collect(), key=lambda r: r["cluster_id"])
+    if not cents:
+        raise ValueError(f"{caller}: empty centroid frame (no index state)")
+    ids = np.array([r["cluster_id"] for r in cents], dtype=np.int32)
+    centers = np.array([r["centroid"] for r in cents], dtype=np.float64)
+    return ids, centers
+
+
+def _assign_cells(
+    df: DataFrame, ids: np.ndarray, centers: np.ndarray, vec_col: str
+) -> DataFrame:
+    """``df`` + ``cluster_id`` = the id of the nearest center, in one
+    Arrow pass with the center matrix in the UDF closure. The centers are
+    taken as float64 — the stored ``centroid array<double>`` values — so
+    a build and a later append assign by the same arithmetic."""
+    centers = np.asarray(centers, dtype=np.float64)
     c_t = centers.T.copy()
     c2 = (centers * centers).sum(1)[None, :]
 
@@ -484,21 +646,9 @@ def build_ivf(
     def _assign(vecs: pd.Series) -> pd.Series:
         x = np.array(vecs.tolist(), dtype=np.float64)
         # argmin ||x-c||^2 == argmin (||c||^2 - 2 x·c); ||x||^2 constant per row
-        return pd.Series((c2 - 2.0 * (x @ c_t)).argmin(1).astype(np.int32))
+        return pd.Series(ids[(c2 - 2.0 * (x @ c_t)).argmin(1)])
 
-    # NO fan_out here (unlike knn_matmul): repartitioning the corpus for
-    # the assign pass was measured net-negative — the shuffle of the full
-    # vector payload costs more than the serial BLAS assign it would
-    # parallelize (b6_ivf_build_large 5.1s -> 6.4s). On a real cluster
-    # the corpus arrives in many splits and the assign pass is parallel
-    # without any repartition.
-    assigned = chunks_df.withColumn("cluster_id", _assign(F.col(vec_col)))
-    spark = chunks_df.sparkSession
-    centroids = spark.createDataFrame(
-        [(int(i), [float(x) for x in c]) for i, c in enumerate(centers)],
-        "cluster_id int, centroid array<double>",
-    )
-    return assigned, centroids
+    return df.withColumn("cluster_id", _assign(F.col(vec_col)))
 
 
 def ivf_append(
@@ -532,20 +682,8 @@ def ivf_append(
     broadcast in the UDF closure; the batch gets its cluster_id in one
     Arrow-vectorized map pass. Nothing shuffles.
     """
-    cents = centroids_df.orderBy("cluster_id").collect()
-    if not cents:
-        raise ValueError("ivf_append: empty centroid frame (no index state)")
-    ids = np.array([r["cluster_id"] for r in cents], dtype=np.int32)
-    centers = np.array([r["centroid"] for r in cents], dtype=np.float64)
-    c_t = centers.T.copy()
-    c2 = (centers * centers).sum(1)[None, :]
-
-    @F.pandas_udf("int")
-    def _assign(vecs: pd.Series) -> pd.Series:
-        x = np.array(vecs.tolist(), dtype=np.float64)
-        return pd.Series(ids[(c2 - 2.0 * (x @ c_t)).argmin(1)])
-
-    return new_df.withColumn("cluster_id", _assign(F.col(vec_col)))
+    ids, centers = _centroid_state(centroids_df, "ivf_append")
+    return _assign_cells(new_df, ids, centers, vec_col)
 
 
 def write_ivf_partitioned(
@@ -588,37 +726,19 @@ def ivf_search_pruned(
     anyway, so pruning buys nothing) and run the exact distributed
     :func:`knn_join_blocked` over the full IVF table instead.
     """
-    import numpy as np
-
-    q_rows = _collect_bounded(
-        queries_df, [query_id_col, query_vec_col], max_collect_rows
+    table = spark.read.parquet(ivf_path)
+    _, q_mat, done = _query_batch(
+        spark, "ivf_search_pruned", queries_df, table, k, max_collect_rows,
+        query_id_col, query_vec_col, doc_id_col, corpus_vec_col,
     )
-    if q_rows is None:
-        return knn_join_blocked(
-            queries_df, spark.read.parquet(ivf_path), k,
-            left_id_col=query_id_col, left_vec_col=query_vec_col,
-            right_id_col=doc_id_col, right_vec_col=corpus_vec_col,
-        )
-    if not q_rows:
-        qid_type = queries_df.schema[query_id_col].dataType.simpleString()
-        did_type = (
-            spark.read.parquet(ivf_path).schema[doc_id_col]
-            .dataType.simpleString()
-        )
-        return spark.createDataFrame(
-            [],
-            f"{query_id_col} {qid_type}, {doc_id_col} {did_type}, "
-            "score double, rank int",
-        )
-    cents = centroids_df.collect()
-    c_ids = np.array([r["cluster_id"] for r in cents])
-    c_mat = np.array([r["centroid"] for r in cents], dtype=np.float64)
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
+    if done is not None:
+        return done
+    c_ids, c_mat = _centroid_state(centroids_df, "ivf_search_pruned")
     scores = q_mat @ c_mat.T  # (n_q, nlist)
     order = np.argsort(-scores, axis=1, kind="stable")[:, :nprobe]
     probed_cells = sorted({int(c_ids[j]) for row in order for j in row})
 
-    chunks = spark.read.parquet(ivf_path).filter(
+    chunks = table.filter(
         F.col("cluster_id").isin(probed_cells)  # -> PartitionFilters
     )
     return ivf_search(
@@ -720,6 +840,45 @@ def build_pq(
             for j in range(m)
         ]
     )  # (m, ksub, dsub)
+    # no fan_out: same measurement as build_ivf's assign pass — shuffling
+    # the vector payload costs more than the serial encode it parallelizes
+    codes_df = chunks_df.withColumn("pq_code", _pq_encoder(books)(F.col(vec_col)))
+    return codes_df, _codebook_frame(chunks_df.sparkSession, books)
+
+
+def _codebook_frame(spark, books) -> DataFrame:
+    """The persistable PQ state: one row per (subspace, code) centroid."""
+    return spark.createDataFrame(
+        [
+            (int(j), int(c), [float(v) for v in cent])
+            for j, book in enumerate(books)
+            for c, cent in enumerate(book)
+        ],
+        "subspace int, code int, centroid array<double>",
+    )
+
+
+def _pq_books(codebooks_df: DataFrame, caller: str) -> np.ndarray:
+    """Collect a codebook frame (m x 2^nbits x dsub — bounded by
+    construction) back into its float64 ``(m, ksub, dsub)`` array."""
+    rows = codebooks_df.collect()
+    if not rows:
+        raise ValueError(f"{caller}: empty codebook frame (no index state)")
+    m = 1 + max(r["subspace"] for r in rows)
+    ksub = 1 + max(r["code"] for r in rows)
+    dsub = len(rows[0]["centroid"])
+    books = np.zeros((m, ksub, dsub), dtype=np.float64)
+    for r in rows:
+        books[r["subspace"], r["code"]] = r["centroid"]
+    return books
+
+
+def _pq_encoder(books: np.ndarray):
+    """``array<int>`` pandas UDF: per subspace, the id of the nearest
+    codebook centroid. Like :func:`_assign_cells` it works on the float64
+    stored values, so build and append encode identically."""
+    books = np.asarray(books, dtype=np.float64)
+    m, _, dsub = books.shape
     b2 = (books * books).sum(2)  # (m, ksub)
 
     @F.pandas_udf("array<int>")
@@ -731,19 +890,7 @@ def build_pq(
             codes[:, j] = (b2[j][None, :] - 2.0 * (xj @ books[j].T)).argmin(1)
         return pd.Series(list(codes))
 
-    # no fan_out: same measurement as build_ivf's assign pass — shuffling
-    # the vector payload costs more than the serial encode it parallelizes
-    codes_df = chunks_df.withColumn("pq_code", _encode(F.col(vec_col)))
-    spark = chunks_df.sparkSession
-    codebooks_df = spark.createDataFrame(
-        [
-            (int(j), int(c), [float(v) for v in books[j, c]])
-            for j in range(m)
-            for c in range(ksub)
-        ],
-        "subspace int, code int, centroid array<double>",
-    )
-    return codes_df, codebooks_df
+    return _encode
 
 
 def pq_append(
@@ -759,27 +906,8 @@ def pq_append(
     exactly the build pass's: append ≡ same-codebook re-encode (pinned
     in tests). No re-training — monitor drift and rebuild when the
     corpus outgrows the training sample, as with IVF."""
-    rows = codebooks_df.orderBy("subspace", "code").collect()
-    if not rows:
-        raise ValueError("pq_append: empty codebook frame (no index state)")
-    m = max(r["subspace"] for r in rows) + 1
-    ksub = max(r["code"] for r in rows) + 1
-    dsub = len(rows[0]["centroid"])
-    books = np.zeros((m, ksub, dsub), dtype=np.float64)
-    for r in rows:
-        books[r["subspace"], r["code"]] = r["centroid"]
-    b2 = (books * books).sum(2)
-
-    @F.pandas_udf("array<int>")
-    def _encode(vecs: pd.Series) -> pd.Series:
-        x = np.array(vecs.tolist(), dtype=np.float64)
-        codes = np.empty((len(x), m), dtype=np.int32)
-        for j in range(m):
-            xj = x[:, j * dsub : (j + 1) * dsub]
-            codes[:, j] = (b2[j][None, :] - 2.0 * (xj @ books[j].T)).argmin(1)
-        return pd.Series(list(codes))
-
-    return new_df.withColumn("pq_code", _encode(F.col(vec_col)))
+    books = _pq_books(codebooks_df, "pq_append")
+    return new_df.withColumn("pq_code", _pq_encoder(books)(F.col(vec_col)))
 
 
 def sq8_append(
@@ -791,12 +919,28 @@ def sq8_append(
     [min, max] codec state (see :func:`pq_append`; out-of-range values
     saturate exactly as in the build pass, so drifted batches degrade
     gracefully rather than wrapping)."""
-    rows = params_df.orderBy("dim_idx").collect()
+    vmin, scale = _sq8_state(params_df, "sq8_append")
+    return new_df.withColumn("sq_code", _sq8_encoder(vmin, scale)(F.col(vec_col)))
+
+
+def _sq8_scale(vmin: np.ndarray, vmax: np.ndarray) -> np.ndarray:
+    # a constant dimension still needs a nonzero scale to round-trip
+    return np.where(vmax > vmin, (vmax - vmin) / 255.0, 1.0)
+
+
+def _sq8_state(params_df: DataFrame, caller: str):
+    """Collect the per-dim params frame (dim-sized by contract) as
+    ``(vmin, scale)`` float64 vectors in dim_idx order."""
+    rows = sorted(params_df.collect(), key=lambda r: r["dim_idx"])
     if not rows:
-        raise ValueError("sq8_append: empty params frame (no index state)")
+        raise ValueError(f"{caller}: empty params frame (no index state)")
     vmin = np.array([r["vmin"] for r in rows], dtype=np.float64)
     vmax = np.array([r["vmax"] for r in rows], dtype=np.float64)
-    scale = np.where(vmax > vmin, (vmax - vmin) / 255.0, 1.0)
+    return vmin, _sq8_scale(vmin, vmax)
+
+
+def _sq8_encoder(vmin: np.ndarray, scale: np.ndarray):
+    """``array<int>`` pandas UDF: ``clip(rint((x - vmin) / scale), 0, 255)``."""
 
     @F.pandas_udf("array<int>")
     def _encode(vecs: pd.Series) -> pd.Series:
@@ -806,7 +950,7 @@ def sq8_append(
         ).astype(np.int32)
         return pd.Series(list(codes))
 
-    return new_df.withColumn("sq_code", _encode(F.col(vec_col)))
+    return _encode
 
 
 def pq_search(
@@ -844,99 +988,35 @@ def pq_search(
     pre-selects on raw scores, consistent by monotonicity). Default
     None keeps full-precision production ranking.
     """
-    q_rows = _collect_bounded(
-        queries_df, [query_id_col, query_vec_col], max_collect_rows
+    q_ids, q_mat, done = _query_batch(
+        spark, "pq_search", queries_df, codes_df, k, max_collect_rows,
+        query_id_col, query_vec_col, doc_id_col, corpus_vec_col,
     )
-    if q_rows is None:
-        if corpus_vec_col in codes_df.columns:
-            return knn_join_blocked(
-                queries_df, codes_df, k,
-                left_id_col=query_id_col, left_vec_col=query_vec_col,
-                right_id_col=doc_id_col, right_vec_col=corpus_vec_col,
-            )
-        raise ValueError(
-            f"pq_search: query batch exceeds max_collect_rows="
-            f"{max_collect_rows} and codes_df lacks '{corpus_vec_col}' for "
-            "an exact fallback; split the query batch or keep the raw "
-            "vectors alongside the codes"
-        )
-    cb = codebooks_df.collect()
-    m = 1 + max(r["subspace"] for r in cb)
-    ksub = 1 + max(r["code"] for r in cb)
-    dsub = len(cb[0]["centroid"])
-    books = np.zeros((m, ksub, dsub), dtype=np.float64)
-    for r in cb:
-        books[r["subspace"], r["code"]] = r["centroid"]
-
-    qid_type = queries_df.schema[query_id_col].dataType.simpleString()
-    did_type = codes_df.schema[doc_id_col].dataType.simpleString()
-    if not q_rows:
-        return spark.createDataFrame(
-            [], f"{query_id_col} {qid_type}, {doc_id_col} {did_type}, score double, rank int"
-        )
-    q_ids = np.array([r[0] for r in q_rows])
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
+    if done is not None:
+        return done
+    books = _pq_books(codebooks_df, "pq_search")
+    m, _, dsub = books.shape
     # LUT: (n_q, m, ksub) — q_j · book_{j,c}
     lut = np.einsum("qjd,jcd->qjc", q_mat.reshape(len(q_mat), m, dsub), books)
-    bc = spark.sparkContext.broadcast((q_ids, lut))
     pool = max(k * rerank, k) if rerank else k
 
-    def _adc_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, lut_ = bc.value
-        nq = len(ids)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            codes = np.array(pdf["pq_code"].tolist(), dtype=np.int64)  # (nb, m)
-            # scores[q, b] = sum_j LUT[q, j, codes[b, j]]
-            scores = np.zeros((nq, len(codes)))
-            for j in range(lut_.shape[1]):
-                scores += lut_[:, j, codes[:, j]]
-            kk = min(pool, scores.shape[1])
-            part = np.argpartition(-scores, kk - 1, axis=1)[:, :kk]
-            doc_ids = pdf[doc_id_col].to_numpy()
-            out_q, out_d, out_s = [], [], []
-            for qi in range(nq):
-                idx = part[qi]
-                order = idx[np.argsort(-scores[qi, idx], kind="stable")]
-                out_q.extend([ids[qi]] * len(order))
-                out_d.extend(doc_ids[order])
-                out_s.extend(scores[qi, order])
-            yield pd.DataFrame(
-                {query_id_col: out_q, doc_id_col: out_d, "score": out_s}
-            )
+    def _adc(lut_: np.ndarray, pdf: pd.DataFrame) -> np.ndarray:
+        codes = np.array(pdf["pq_code"].tolist(), dtype=np.int64)  # (nb, m)
+        # scores[q, b] = sum_j LUT[q, j, codes[b, j]]
+        scores = np.zeros((len(lut_), len(codes)))
+        for j in range(lut_.shape[1]):
+            scores += lut_[:, j, codes[:, j]]
+        return scores
 
-    cand = codes_df.select(doc_id_col, "pq_code").mapInPandas(
-        _adc_topk, f"{query_id_col} {qid_type}, {doc_id_col} {did_type}, score double"
+    cand = _batch_topk(
+        spark, codes_df.select(doc_id_col, "pq_code"), q_ids, lut, _adc,
+        pool, query_id_col, doc_id_col,
+        _hits_ddl(queries_df, codes_df, query_id_col, doc_id_col),
     )
-    if round_to is not None:
-        cand = cand.withColumn("score", F.round("score", round_to))
-    ranked = cand.withColumn(
-        "rank", F.row_number().over(_rank_window(query_id_col, doc_id_col))
-    ).filter(F.col("rank") <= pool)
-    if not rerank or corpus_vec_col not in codes_df.columns:
-        return ranked.filter(F.col("rank") <= k)
-    # exact refine on the rerank*k survivors only
-    exact_sc = dot(F.col(query_vec_col), F.col(corpus_vec_col))
-    if round_to is not None:
-        exact_sc = F.round(exact_sc, round_to)
-    exact = (
-        ranked.select(query_id_col, doc_id_col)
-        .join(codes_df.select(doc_id_col, corpus_vec_col), doc_id_col)
-        .join(
-            F.broadcast(queries_df.select(query_id_col, query_vec_col)),
-            query_id_col,
-        )
-        .select(
-            query_id_col,
-            doc_id_col,
-            exact_sc.alias("score"),
-        )
+    return _rerank_exact(
+        cand, queries_df, codes_df, k, rerank, pool, round_to,
+        query_id_col, query_vec_col, doc_id_col, corpus_vec_col,
     )
-    out = exact.withColumn(
-        "rank", F.row_number().over(_rank_window(query_id_col, doc_id_col))
-    )
-    return out.filter(F.col("rank") <= k)
 
 
 def build_sq8(
@@ -988,18 +1068,8 @@ def build_sq8(
         train = _sampled_train_matrix(chunks_df, vec_col, sample_rows, seed)
         vmin = train.min(0)
         vmax = train.max(0)
-    # a constant dimension still needs a nonzero scale to round-trip
-    scale = np.where(vmax > vmin, (vmax - vmin) / 255.0, 1.0)
-
-    @F.pandas_udf("array<int>")
-    def _encode(vecs: pd.Series) -> pd.Series:
-        x = np.array(vecs.tolist(), dtype=np.float64)
-        codes = np.clip(
-            np.rint((x - vmin[None, :]) / scale[None, :]), 0, 255
-        ).astype(np.int32)
-        return pd.Series(list(codes))
-
-    codes_df = chunks_df.withColumn("sq_code", _encode(F.col(vec_col)))
+    encode = _sq8_encoder(vmin, _sq8_scale(vmin, vmax))
+    codes_df = chunks_df.withColumn("sq_code", encode(F.col(vec_col)))
     spark = chunks_df.sparkSession
     params_df = spark.createDataFrame(
         [(int(d), float(vmin[d]), float(vmax[d])) for d in range(len(vmin))],
@@ -1040,98 +1110,31 @@ def sq8_search(
     monotonicity (a strictly larger raw score never rounds smaller).
     Default None keeps full-precision production ranking.
     """
-    q_rows = _collect_bounded(
-        queries_df, [query_id_col, query_vec_col], max_collect_rows
+    q_ids, q_mat, done = _query_batch(
+        spark, "sq8_search", queries_df, codes_df, k, max_collect_rows,
+        query_id_col, query_vec_col, doc_id_col, corpus_vec_col,
     )
-    if q_rows is None:
-        if corpus_vec_col in codes_df.columns:
-            return knn_join_blocked(
-                queries_df, codes_df, k,
-                left_id_col=query_id_col, left_vec_col=query_vec_col,
-                right_id_col=doc_id_col, right_vec_col=corpus_vec_col,
-            )
-        raise ValueError(
-            f"sq8_search: query batch exceeds max_collect_rows="
-            f"{max_collect_rows} and codes_df lacks '{corpus_vec_col}' for "
-            "an exact fallback; split the query batch or keep the raw "
-            "vectors alongside the codes"
-        )
-    prow = params_df.orderBy("dim_idx").collect()  # dim-sized by contract
-    vmin = np.array([r["vmin"] for r in prow])
-    scale = np.where(
-        np.array([r["vmax"] for r in prow]) > vmin,
-        (np.array([r["vmax"] for r in prow]) - vmin) / 255.0,
-        1.0,
-    )
-
-    qid_type = queries_df.schema[query_id_col].dataType.simpleString()
-    did_type = codes_df.schema[doc_id_col].dataType.simpleString()
-    if not q_rows:
-        return spark.createDataFrame(
-            [],
-            f"{query_id_col} {qid_type}, {doc_id_col} {did_type}, "
-            "score double, rank int",
-        )
-    q_ids = np.array([r[0] for r in q_rows])
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
+    if done is not None:
+        return done
+    vmin, scale = _sq8_state(params_df, "sq8_search")
     w = q_mat * scale[None, :]          # (nq, dim)
     c0 = q_mat @ vmin                   # (nq,)
-    bc = spark.sparkContext.broadcast((q_ids, w, c0))
     pool = max(k * rerank, k) if rerank else k
 
-    def _sq_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids, w_, c0_ = bc.value
-        nq = len(ids)
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            codes = np.array(pdf["sq_code"].tolist(), dtype=np.float64)
-            scores = w_ @ codes.T + c0_[:, None]    # (nq, nb)
-            kk = min(pool, scores.shape[1])
-            part = np.argpartition(-scores, kk - 1, axis=1)[:, :kk]
-            doc_ids = pdf[doc_id_col].to_numpy()
-            out_q, out_d, out_s = [], [], []
-            for qi in range(nq):
-                idx = part[qi]
-                order = idx[np.argsort(-scores[qi, idx], kind="stable")]
-                out_q.extend([ids[qi]] * len(order))
-                out_d.extend(doc_ids[order])
-                out_s.extend(scores[qi, order])
-            yield pd.DataFrame(
-                {query_id_col: out_q, doc_id_col: out_d, "score": out_s}
-            )
+    def _affine(state, pdf: pd.DataFrame) -> np.ndarray:
+        w_, c0_ = state
+        codes = np.array(pdf["sq_code"].tolist(), dtype=np.float64)
+        return w_ @ codes.T + c0_[:, None]    # (nq, nb)
 
-    cand = codes_df.select(doc_id_col, "sq_code").mapInPandas(
-        _sq_topk,
-        f"{query_id_col} {qid_type}, {doc_id_col} {did_type}, score double",
+    cand = _batch_topk(
+        spark, codes_df.select(doc_id_col, "sq_code"), q_ids, (w, c0),
+        _affine, pool, query_id_col, doc_id_col,
+        _hits_ddl(queries_df, codes_df, query_id_col, doc_id_col),
     )
-    if round_to is not None:
-        cand = cand.withColumn("score", F.round("score", round_to))
-    ranked = cand.withColumn(
-        "rank", F.row_number().over(_rank_window(query_id_col, doc_id_col))
-    ).filter(F.col("rank") <= pool)
-    if not rerank or corpus_vec_col not in codes_df.columns:
-        return ranked.filter(F.col("rank") <= k)
-    exact_sc = dot(F.col(query_vec_col), F.col(corpus_vec_col))
-    if round_to is not None:
-        exact_sc = F.round(exact_sc, round_to)
-    exact = (
-        ranked.select(query_id_col, doc_id_col)
-        .join(codes_df.select(doc_id_col, corpus_vec_col), doc_id_col)
-        .join(
-            F.broadcast(queries_df.select(query_id_col, query_vec_col)),
-            query_id_col,
-        )
-        .select(
-            query_id_col,
-            doc_id_col,
-            exact_sc.alias("score"),
-        )
+    return _rerank_exact(
+        cand, queries_df, codes_df, k, rerank, pool, round_to,
+        query_id_col, query_vec_col, doc_id_col, corpus_vec_col,
     )
-    out = exact.withColumn(
-        "rank", F.row_number().over(_rank_window(query_id_col, doc_id_col))
-    )
-    return out.filter(F.col("rank") <= k)
 
 
 def knn_graph(
@@ -1238,6 +1241,16 @@ def kmeans_summary(
         max_points_per_centroid=max_points_per_centroid,
         iters=iters,
     )
+    return _cluster_summary(assigned, centroids, vec_col)
+
+
+def _cluster_summary(
+    assigned: DataFrame, centroids: DataFrame, vec_col: str
+) -> DataFrame:
+    """One row per non-empty cluster: cluster_id, n, inertia (sum of
+    squared L2 distances to the centroid, 6dp), centroid_norm (6dp) —
+    one map-combined agg over the broadcast centroid join, distances as
+    pure-codegen ``aggregate(zip_with(...))``."""
     sq = F.aggregate(
         F.zip_with(
             F.col(vec_col).cast("array<double>"),
@@ -1329,10 +1342,8 @@ def lloyd_fixed_centroids(
 
     Returns centroids (cluster_id int, centroid array<double>).
     """
-    centers = _lloyd_fixed(df, vec_col, id_col, k, iters)
-    return df.sparkSession.createDataFrame(
-        [(int(i), [float(x) for x in c]) for i, c in enumerate(centers)],
-        "cluster_id int, centroid array<double>",
+    return _centroid_frame(
+        df.sparkSession, _lloyd_fixed(df, vec_col, id_col, k, iters)
     )
 
 
@@ -1385,38 +1396,8 @@ def kmeans_summary_fixed(
     (see lloyd_fixed_centroids). The summary itself is the same
     pure-codegen ``aggregate(zip_with)`` squared-distance agg as
     kmeans_summary — nothing row-sized to the driver."""
-    centers = _lloyd_fixed(df, vec_col, id_col, k, iters)
-    centroids = df.sparkSession.createDataFrame(
-        [(int(i), [float(x) for x in c]) for i, c in enumerate(centers)],
-        "cluster_id int, centroid array<double>",
-    )
-    assigned = df.withColumn("cluster_id", _argmin_cluster(vec_col, centers))
-    sq = F.aggregate(
-        F.zip_with(
-            F.col(vec_col).cast("array<double>"),
-            F.col("centroid"),
-            lambda x, c: (x - c) * (x - c),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    norm = F.sqrt(
-        F.aggregate(
-            F.col("centroid"),
-            F.lit(0.0),
-            lambda acc, v: acc + v * v,
-        )
-    )
-    return (
-        assigned.join(F.broadcast(centroids), "cluster_id")
-        .select("cluster_id", sq.alias("_sq"), norm.alias("_nm"))
-        .groupBy("cluster_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("_sq"), 6).alias("inertia"),
-            F.round(F.first("_nm"), 6).alias("centroid_norm"),
-        )
-    )
+    assigned, centroids = build_ivf_fixed(df, k, iters, vec_col, id_col)
+    return _cluster_summary(assigned, centroids, vec_col)
 
 
 def build_ivf_fixed(
@@ -1435,14 +1416,10 @@ def build_ivf_fixed(
     similarity_ivf gate entry); :func:`build_ivf` remains the
     production path (sampled train, float32 BLAS assign)."""
     centers = _lloyd_fixed(chunks_df, vec_col, id_col, nlist, iters)
-    centroids = chunks_df.sparkSession.createDataFrame(
-        [(int(i), [float(x) for x in c]) for i, c in enumerate(centers)],
-        "cluster_id int, centroid array<double>",
-    )
     assigned = chunks_df.withColumn(
         "cluster_id", _argmin_cluster(vec_col, centers)
     )
-    return assigned, centroids
+    return assigned, _centroid_frame(chunks_df.sparkSession, centers)
 
 
 def build_pq_fixed(
@@ -1490,16 +1467,7 @@ def build_pq_fixed(
             ]
         ),
     )
-    spark = chunks_df.sparkSession
-    books_df = spark.createDataFrame(
-        [
-            (j, int(c), [float(x) for x in books[j][c]])
-            for j in range(m)
-            for c in range(ksub)
-        ],
-        "subspace int, code int, centroid array<double>",
-    )
-    return codes_df, books_df
+    return codes_df, _codebook_frame(chunks_df.sparkSession, books)
 
 
 def ivf_append_fixed(
@@ -1515,15 +1483,12 @@ def ivf_append_fixed(
     formulas must match exactly). Same contract: given the same
     centroid frame, a vector gets the same cluster_id whether it
     arrives in the build or any later append."""
-    cents = centroids_df.orderBy("cluster_id").collect()
-    if not cents:
-        raise ValueError("ivf_append_fixed: empty centroid frame")
-    if [r["cluster_id"] for r in cents] != list(range(len(cents))):
+    ids, centers = _centroid_state(centroids_df, "ivf_append_fixed")
+    if ids.tolist() != list(range(len(ids))):
         raise ValueError(
             "ivf_append_fixed: centroid ids must be dense 0..k-1 "
             "(a build_ivf_fixed frame); use ivf_append for arbitrary ids"
         )
-    centers = np.array([r["centroid"] for r in cents], dtype=np.float64)
     return new_df.withColumn("cluster_id", _argmin_cluster(vec_col, centers))
 
 
@@ -1758,44 +1723,18 @@ def ivfpq_search(
     """
     if nprobe < 1:
         raise ValueError(f"ivfpq_search: nprobe >= 1, got {nprobe}")
-    q_rows = _collect_bounded(
-        queries_df, [query_id_col, query_vec_col], max_collect_rows
+    q_ids, q_mat, done = _query_batch(
+        spark, "ivfpq_search", queries_df, codes_df, k, max_collect_rows,
+        query_id_col, query_vec_col, doc_id_col, corpus_vec_col,
     )
-    if q_rows is None:
-        if corpus_vec_col in codes_df.columns:
-            return knn_join_blocked(
-                queries_df, codes_df, k,
-                left_id_col=query_id_col, left_vec_col=query_vec_col,
-                right_id_col=doc_id_col, right_vec_col=corpus_vec_col,
-            )
-        raise ValueError(
-            "ivfpq_search: query batch exceeds max_collect_rows="
-            f"{max_collect_rows} and codes_df lacks '{corpus_vec_col}' "
-            "for an exact fallback"
-        )
+    if done is not None:
+        return done
+    q_ids = q_ids.tolist()
     qid_type = queries_df.schema[query_id_col].dataType.simpleString()
-    did_type = codes_df.schema[doc_id_col].dataType.simpleString()
-    if not q_rows:
-        return spark.createDataFrame(
-            [],
-            f"{query_id_col} {qid_type}, {doc_id_col} {did_type},"
-            " score double, rank int",
-        )
-    cents = centroids_df.orderBy("cluster_id").collect()
-    if not cents:
-        raise ValueError("ivfpq_search: empty centroid frame")
-    c_ids = np.array([r["cluster_id"] for r in cents])
-    centers = np.array([r["centroid"] for r in cents], dtype=np.float64)
-    cb = codebooks_df.collect()
-    m = 1 + max(r["subspace"] for r in cb)
-    ksub = 1 + max(r["code"] for r in cb)
-    dsub = len(cb[0]["centroid"])
-    books = np.zeros((m, ksub, dsub), dtype=np.float64)
-    for r in cb:
-        books[r["subspace"], r["code"]] = r["centroid"]
+    c_ids, centers = _centroid_state(centroids_df, "ivfpq_search")
+    books = _pq_books(codebooks_df, "ivfpq_search")
+    m, _, dsub = books.shape
 
-    q_ids = [r[0] for r in q_rows]
-    q_mat = np.array([r[1] for r in q_rows], dtype=np.float64)
     qdotc = q_mat @ centers.T  # (nq, nlist)
     npb = min(nprobe, len(c_ids))
     probe_rows = []
@@ -1850,33 +1789,9 @@ def ivfpq_search(
             ).groupby(query_id_col, sort=False).head(pool)
 
     scored = cand.mapInPandas(
-        _adc,
-        f"{query_id_col} {qid_type}, {doc_id_col} {did_type}, score double",
+        _adc, _hits_ddl(queries_df, codes_df, query_id_col, doc_id_col)
     )
-    if round_to is not None:
-        scored = scored.withColumn("score", F.round("score", round_to))
-    ranked = scored.withColumn(
-        "rank", F.row_number().over(_rank_window(query_id_col, doc_id_col))
-    ).filter(F.col("rank") <= pool)
-    if not rerank or corpus_vec_col not in codes_df.columns:
-        return ranked.filter(F.col("rank") <= k)
-    exact_sc = dot(F.col(query_vec_col), F.col(corpus_vec_col))
-    if round_to is not None:
-        exact_sc = F.round(exact_sc, round_to)
-    exact = (
-        ranked.select(query_id_col, doc_id_col)
-        .join(codes_df.select(doc_id_col, corpus_vec_col), doc_id_col)
-        .join(
-            F.broadcast(queries_df.select(query_id_col, query_vec_col)),
-            query_id_col,
-        )
-        .select(
-            query_id_col,
-            doc_id_col,
-            exact_sc.alias("score"),
-        )
+    return _rerank_exact(
+        scored, queries_df, codes_df, k, rerank, pool, round_to,
+        query_id_col, query_vec_col, doc_id_col, corpus_vec_col,
     )
-    out = exact.withColumn(
-        "rank", F.row_number().over(_rank_window(query_id_col, doc_id_col))
-    )
-    return out.filter(F.col("rank") <= k)

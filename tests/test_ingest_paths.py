@@ -1,5 +1,6 @@
 """build_index / append_to_index share one ingest DAG; the engine keeps
-one persist ring; $SPARK_GRAFT_CPUS is parsed in one place."""
+one persist ring (which re-persists after a bare clearCache);
+$SPARK_GRAFT_CPUS is parsed in one place."""
 
 import csv
 import os
@@ -101,6 +102,21 @@ def test_reset_pins_releases_row_numbering_pins(spark):
     assert persisted() >= before + 2
     assert reset_pins(spark) >= 2
     assert persisted() == before
+
+
+def test_pin_after_bare_clear_cache_repersists(spark):
+    from pyspark import StorageLevel
+
+    from indexlab_spark.functions.cache import pin, reset_pins
+
+    def frame():
+        return spark.range(50).withColumn("sq", F.col("id") * F.col("id"))
+
+    reset_pins(spark)
+    assert pin(frame()).storageLevel != StorageLevel.NONE
+    spark.catalog.clearCache()
+    assert pin(frame()).storageLevel != StorageLevel.NONE
+    reset_pins(spark)
 
 
 def test_empty_cpus_env_imports():

@@ -246,14 +246,25 @@ def test_pq_search_oversize_routes_to_blocked(spark, emb, queries, numpy_truth):
     _check(out.collect(), numpy_truth)
 
 
-def test_pq_search_oversize_without_vectors_raises(spark, emb, queries):
-    from indexlab_spark.operators.knn import build_pq, pq_search
+@pytest.mark.parametrize("search", ["pq_search", "sq8_search", "ivfpq_search"])
+def test_pq_search_oversize_without_vectors_raises(spark, emb, queries, search):
+    from indexlab_spark.operators import knn
 
     corpus = emb.select(F.col("vec_id").alias("doc_id"), "embedding")
-    codes, books = build_pq(corpus, m=8, nbits=4, seed=42)
+    if search == "pq_search":
+        codes, books = knn.build_pq(corpus, m=8, nbits=4, seed=42)
+        state = (books,)
+    elif search == "sq8_search":
+        codes, params = knn.build_sq8(corpus, seed=42)
+        state = (params,)
+    else:
+        codes, cents, books = knn.build_ivfpq(corpus, nlist=4, m=4, nbits=4, seed=1)
+        state = (cents, books)
     bare = codes.drop("embedding")
-    with pytest.raises(ValueError, match="max_collect_rows"):
-        pq_search(spark, queries, bare, books, K, max_collect_rows=N_QUERIES - 1)
+    with pytest.raises(ValueError, match=f"{search}: .*max_collect_rows"):
+        getattr(knn, search)(
+            spark, queries, bare, *state, K, max_collect_rows=N_QUERIES - 1
+        )
 
 
 def test_ivf_pruned_oversize_routes_to_blocked(
@@ -522,14 +533,24 @@ def test_ivfpq_append_equals_rebuild_encoding(spark, emb):
 
 
 def test_ivfpq_search_empty_queries(spark, emb):
-    from indexlab_spark.operators.knn import build_ivfpq, ivfpq_search
+    from indexlab_spark.operators.knn import (
+        build_ivfpq, build_pq, build_sq8, ivfpq_search, pq_search, sq8_search,
+    )
 
     corpus = emb.select(F.col("vec_id").alias("doc_id"), "embedding")
     codes, cents, books = build_ivfpq(corpus, nlist=4, m=4, nbits=4, seed=1)
+    pq_codes, pq_books = build_pq(corpus, m=4, nbits=4, seed=1)
+    sq_codes, sq_params = build_sq8(corpus, seed=1)
     empty_q = spark.createDataFrame(
         [], "query_id bigint, qvec array<float>"
     )
-    assert ivfpq_search(spark, empty_q, codes, cents, books, K).count() == 0
+    for out in (
+        ivfpq_search(spark, empty_q, codes, cents, books, K),
+        pq_search(spark, empty_q, pq_codes, pq_books, K),
+        sq8_search(spark, empty_q, sq_codes, sq_params, K),
+    ):
+        assert out.columns == ["query_id", "doc_id", "score", "rank"]
+        assert out.count() == 0
 
 
 # ----------------------------------------------------- fixed-iteration Lloyd

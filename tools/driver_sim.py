@@ -18,8 +18,13 @@ import time
 # Anchor imports at the repo root, not the caller's CWD (same failure
 # class as the ADVICE-r13/r14 CWD-relative glob and stage commands):
 # __spark_entry__ and indexlab_spark must resolve no matter where the
-# sim is invoked from.
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# sim is invoked from. Spark's Python workers do not inherit sys.path,
+# so the root also goes on PYTHONPATH before the session starts.
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+)
 
 import duckdb
 import pandas as pd
